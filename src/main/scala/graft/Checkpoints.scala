@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.functions.{count, when}
 
 /** Checkpoint-mode switch for the iterative operators (q46 chain
   * resolution, d26/d34 connected components, p66 BPE learning, s38 MMR,
@@ -21,6 +22,12 @@ import org.apache.spark.sql.DataFrame
   * ordering (Dataset.checkpoint wraps the RDD in a LogicalRDD carrying
   * the physical plan's partitioning/ordering), so downstream
   * exchange-reuse shapes are identical in either mode.
+  *
+  * [[Checkpoints.fixpoint]] is the one iterate-to-fixpoint loop (the
+  * reference's `logical_cases` loop, scratch/other/event-history.R:42-52)
+  * that q46 chain resolution and d26/d34 connected components run on:
+  * every round is one materialization through [[Checkpoints.of]], and
+  * the round's convergence count rides on that same job.
   */
 object Checkpoints {
   /** Session conf key: when set (non-empty), iterative operators use
@@ -91,6 +98,43 @@ object Checkpoints {
         df.checkpoint()
       }
     case None => df.localCheckpoint()
+  }
+
+  /** Iterate to a fixpoint: materialize `init`, then `round` of the
+    * previous materialization, until a materialization holds no row for
+    * which `pending` is true.
+    *
+    * The pending rows are counted on each round's OWN checkpoint job —
+    * the round's plan carries `observe(count(when(pending, 1)))` — so a
+    * round costs exactly its materialization, with no separate probe
+    * job. (`count(when …)`, not `sum`: an empty round counts 0, where
+    * `sum` would be null.) Columns named in `scratch` exist only to
+    * compute `pending` (e.g. the previous round's label): they are
+    * projected away above the observation, so every materialization
+    * keeps the state schema.
+    *
+    * Returns every materialization, newest (the converged one) first.
+    * Fails with "`what` did not converge in `maxIters` rounds" when the
+    * `maxIters`-th round still has pending rows.
+    */
+  def fixpoint(init: DataFrame, pending: Column, maxIters: Int, what: String,
+      scratch: String*)(round: DataFrame => DataFrame): List[DataFrame] = {
+    def materialize(df: DataFrame): (DataFrame, Long) = {
+      val obs = new Observation()
+      val done = of(df.observe(obs, count(when(pending, 1)).as("pending"))
+        .drop(scratch: _*))
+      (done, obs.get("pending").asInstanceOf[Long])
+    }
+    @annotation.tailrec
+    def loop(rounds: List[DataFrame], nPending: Long, iter: Int): List[DataFrame] =
+      if (nPending == 0) rounds
+      else {
+        require(iter < maxIters, s"$what did not converge in $maxIters rounds")
+        val (next, n) = materialize(round(rounds.head))
+        loop(next :: rounds, n, iter + 1)
+      }
+    val (first, n0) = materialize(init)
+    loop(List(first), n0, 0)
   }
 
   /** Chainable form: `df.graftCheckpoint()` ≡ `Checkpoints.of(df)`. */

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Checkpoints, Tables}
 import graft.functions.PortableHash._
 import graft.Checkpoints.Ops
 
@@ -160,25 +160,29 @@ object Dedup {
   /** Minimum-label connected components over an undirected edge list
     * (u, v), u ≠ v. Returns (node, cluster_id) where cluster_id is the
     * smallest node id in the component — every node that appears in at
-    * least one edge gets a row.
+    * least one edge gets a row; an empty edge list gives no rows.
     *
     * Algorithm: min-label propagation with a pointer-jump step each
     * round (newlab(u) = min over neighbors' labels, then chase the
     * label's OWN label — labels are node ids, so label composition is an
     * equi-join). Plain propagation needs O(diameter) rounds; the jump
-    * step short-circuits long chains the same way q46's pointer doubling
-    * does. Each round is two linear equi-joins + one aggregation —
-    * nothing is ever all-pairs — and `localCheckpoint` truncates lineage
-    * so the plan does not grow with iteration count (reliable
-    * `checkpoint()` at cluster scale, as for q46).
+    * step short-circuits long chains. Each round is two linear equi-joins
+    * + one aggregation — nothing is ever all-pairs — and runs on
+    * [[graft.Checkpoints.fixpoint]], which truncates lineage so the plan
+    * does not grow with iteration count (reliable `checkpoint()` at
+    * cluster scale, as for q46).
+    *
+    * Convergence is observed, not probed: each round carries its input
+    * label as `old`, and the fixpoint loop counts `lab =!= old` on the
+    * round's own checkpoint job; the first round that changes no label
+    * ends the loop.
     *
     * Fixpoint = component minimum: labels only decrease and never go
     * below the component min μ; a fixpoint label is constant per
     * component (an edge with unequal labels would still propagate), and
     * a constant label m > μ is impossible because lab(μ) ≤ μ < m.
     */
-  def connectedComponents(edgesRaw: DataFrame,
-      maxIters: Int = 30, hintRounds: Int = 2): DataFrame = {
+  def connectedComponents(edgesRaw: DataFrame, maxIters: Int = 30): DataFrame = {
     // materialize the edge list once — it is re-joined every round, and
     // without the checkpoint each round would re-evaluate the whole
     // upstream candidate-generation lineage (shingle + band join)
@@ -186,38 +190,28 @@ object Dedup {
       .unionByName(edgesRaw.select(col("v").as("u"), col("u").as("v")))
       .graftCheckpoint()
     // init lab(u) = min(u, neighbors): the first propagation round folded
-    // into the aggregation that materializes the node set
-    var lab = edges.groupBy("u").agg(min(col("v")).as("mn"))
-      .select(col("u").as("node"), least(col("u"), col("mn")).as("lab"))
-      .graftCheckpoint()
-    var iter = 0
-    var converged = false
-    def round(probe: Boolean): Unit = {
+    // into the aggregation that materializes the node set; the label it
+    // replaces is the node's own id
+    val init = edges.groupBy("u").agg(min(col("v")).as("mn"))
+      .select(col("u").as("node"), least(col("u"), col("mn")).as("lab"),
+        col("u").as("old"))
+    def round(lab: DataFrame): DataFrame = {
       // 1) propagate: minimum label over the closed neighborhood
       val nbr = edges.as("e").join(lab.as("l"), col("e.v") === col("l.node"))
         .groupBy(col("e.u").as("node")).agg(min(col("l.lab")).as("nlab"))
       val cand = lab.as("x").join(nbr.as("y"), col("x.node") === col("y.node"))
-        .select(col("x.node").as("node"), least(col("x.lab"), col("y.nlab")).as("clab"))
+        .select(col("x.node").as("node"),
+          least(col("x.lab"), col("y.nlab")).as("clab"), col("x.lab").as("old"))
       // 2) pointer jump: a label is itself a node — adopt ITS label
       // (left join: the current label-holder may carry no smaller label)
-      val next = cand.as("c").join(lab.as("j"), col("c.clab") === col("j.node"), "left")
+      cand.as("c").join(lab.as("j"), col("c.clab") === col("j.node"), "left")
         .select(col("c.node").as("node"),
-          least(col("c.clab"), coalesce(col("j.lab"), col("c.clab"))).as("lab"))
-        .graftCheckpoint()
-      if (probe)
-        converged = next.as("n")
-          .join(lab.as("o"), col("n.node") === col("o.node"))
-          .filter(col("n.lab") =!= col("o.lab")).isEmpty
-      lab = next
-      iter += 1
+          least(col("c.clab"), coalesce(col("j.lab"), col("c.clab"))).as("lab"),
+          col("c.old").as("old"))
     }
-    // hint rounds run without the emptiness probe (a scheduler round-trip
-    // each — the q46 depthHint rationale), then probe to true fixpoint
-    while (iter < hintRounds && !converged) round(probe = false)
-    while (iter < maxIters && !converged) round(probe = true)
-    require(converged,
-      s"connected components did not converge in $maxIters rounds")
-    lab.select(col("node"), col("lab").as("cluster_id"))
+    Checkpoints.fixpoint(init, col("lab") =!= col("old"), maxIters,
+        "connected components", "old")(round)
+      .head.select(col("node"), col("lab").as("cluster_id"))
   }
 
   /** d26: duplicate-cluster resolution — the near-dup graph's TRANSITIVE

@@ -280,8 +280,8 @@ class PropertySpec extends AnyFunSuite {
     // Random parent forests (parent < id keeps them acyclic, like the
     // reference's remand chains which always link to an EARLIER case),
     // with dangling links (parent ids absent from the table) and nulls.
-    // Verifies root labels AND depths from the pointer-doubling loop,
-    // including depths that are not powers of two.
+    // Verifies root labels AND depths from the one-hop fixpoint loop,
+    // including depths that are not multiples of the hops per round.
     import spark.implicits._
     import graft.operators.Chains
     val rnd = new scala.util.Random(11)
@@ -306,14 +306,34 @@ class PropertySpec extends AnyFunSuite {
       val df = links.map { case (id, p) =>
         (id, Option(p).map(_.longValue)) }.toDF("id", "parent")
       val want = (0L until n.toLong).map(id => id -> ref(id)).toMap
-      // exercise BOTH strategies on the same forest: a small hint takes
-      // the one-hop path, a hint above the cutoff takes pointer doubling
-      Seq(4 -> "one-hop", 1000 -> "doubling").foreach { case (hint, label) =>
-        val got = Chains.resolveChains(df, maxIters = 40, depthHint = hint)
-          .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-        assert(got === want, s"trial $trial mismatch ($label)")
-      }
+      val got = Chains.resolveChains(df, maxIters = 40)
+        .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+      assert(got === want, s"trial $trial mismatch")
     }
+  }
+
+  test("chain resolution over a link cycle fails with the named convergence error") {
+    // 1 -> 2 -> 3 -> 1 never reaches a root; 4 -> 5 (root) resolves, so
+    // the loop keeps running on the cycle alone until the round budget
+    import spark.implicits._
+    val links = Seq((1L, Option(2L)), (2L, Some(3L)), (3L, Some(1L)),
+      (4L, Some(5L)), (5L, None)).toDF("id", "parent")
+    val e = intercept[IllegalArgumentException](
+      graft.operators.Chains.resolveChains(links, maxIters = 3))
+    assert(e.getMessage.contains("chain resolution did not converge in 3 rounds"))
+  }
+
+  test("connected components of an empty edge list is empty, without blocking") {
+    import spark.implicits._
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val edges = Seq.empty[(Long, Long)].toDF("u", "v")
+    // the round count arrives through an Observation: if an empty round
+    // never delivered it, the build would wait forever — bound the wait
+    val rows = Await.result(Future(
+      graft.operators.Dedup.connectedComponents(edges).collect()), 2.minutes)
+    assert(rows.isEmpty)
   }
 
   test("graft.checkpoint.dir conf flips iterative checkpoints to reliable mode") {
@@ -334,9 +354,17 @@ class PropertySpec extends AnyFunSuite {
       // and the resolved chain result is unaffected by the mode
       val links = Seq((1L, Option.empty[Long]), (2L, Some(1L)), (3L, Some(2L)))
         .toDF("id", "parent")
-      val roots = graft.operators.Chains.resolveChains(links, depthHint = 4)
+      val roots = graft.operators.Chains.resolveChains(links)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(roots === Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
+      // connected components count convergence through an Observation on
+      // each round's checkpoint: it must be delivered under checkpoint()
+      // too (a path with a pendant, so more than one round runs)
+      val edges = Seq((5L, 4L), (4L, 3L), (3L, 2L), (2L, 1L), (3L, 6L))
+        .map { case (a, b) => (math.min(a, b), math.max(a, b)) }.toDF("u", "v")
+      val labels = graft.operators.Dedup.connectedComponents(edges)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(labels === (1L to 6L).map(_ -> 1L).toMap)
     } finally {
       spark.conf.unset(Checkpoints.DirConf)
       def rm(f: java.io.File): Unit = {
